@@ -56,9 +56,11 @@ def extract_from_html(html: str) -> dict:
     title = identifier = oai = None
     creators: list[str] = []
     outlinks: list[str] = []
-    for m in _TAG_RE.finditer(html):
-        tag = m.group(1).lower()
-        a = _attrs(m.group(2))
+    for tag, raw in _TAG_RE.findall(html):
+        tag = tag.lower()
+        if tag == "meta" and "dc." not in raw.lower():
+            continue  # cannot name dc.*: skip the attribute parse
+        a = _attrs(raw)
         if tag == "meta":
             name = (a.get("name") or "").lower()
             content = a.get("content")

@@ -835,7 +835,7 @@ def shard_assign(
 
     -> (id, seq, shard_id). Feed to :func:`export_shards` to write.
     """
-    seq = global_sequence(docs.select(F.col(id_col)), [id_col], "seq")
+    seq, _ = global_sequence(docs.select(F.col(id_col)), [id_col], "seq")
     return seq.withColumn(
         "shard_id", F.floor(F.col("seq") / F.lit(docs_per_shard)).cast("long")
     )

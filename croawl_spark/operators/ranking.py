@@ -64,16 +64,25 @@ def global_sequence(
     start: int = 0,
     n_parts: int | None = None,
     eager_input: bool = False,
-) -> DataFrame:
+) -> tuple[DataFrame, int]:
     """Cluster-size-invariant global sequence: dense rank over a total order,
-    computed WITHOUT a single-partition window.
+    computed WITHOUT a single-partition window. Returns ``(ranked, n_rows)``.
 
-    Two-phase: range-partition on the order columns (parallel sort), count
-    rows per range partition (tiny collect), then rank within each partition
-    plus the cumulative offset of earlier partitions. The result depends only
-    on the data (order_cols must be a total order) — range boundaries chosen
-    by sampling affect task placement, never the output. NEVER
-    ``monotonically_increasing_id`` (partition-dependent values).
+    Two-phase: range-partition on the order columns (parallel sort), then
+    rank within each partition plus the cumulative offset of earlier
+    partitions. The per-partition row counts come from an ``observe()`` on
+    the ``_pid`` checkpoint itself (one ``count(when(_pid = i))`` per range
+    partition, computed as the rows stream into the checkpoint), and the
+    offsets ride into the rank as a literal array indexed by ``_pid`` — so
+    a call costs the checkpoint and nothing else: no count job, no offsets
+    frame, and callers get the row total without a ``count()``. The result
+    depends only on the data (order_cols must be a total order) — range
+    boundaries chosen by sampling affect task placement, never the output.
+    NEVER ``monotonically_increasing_id`` (partition-dependent values).
+
+    The rank window stays partitioned by ``_pid``: AQE coalesces that
+    exchange by bytes, so small inputs rank in one task while large ones
+    keep up to ``n_parts``.
 
     ``eager_input`` (r06): the range exchange SAMPLES its child to pick
     boundaries, so the segment of the input plan above its last shuffle
@@ -81,43 +90,29 @@ def global_sequence(
     non-trivial post-shuffle work (window top-k, anti-join probes) pass
     True to checkpoint the input once; values are unaffected either way.
     """
+    from pyspark.sql import Observation
+
     spark = df.sparkSession
     if eager_input:
         df = df.localCheckpoint()
     if n_parts is None:
         n_parts = max(spark.sparkContext.defaultParallelism, 8)
-    parted = df.repartitionByRange(n_parts, *[F.col(c) for c in order_cols])
-    parted = parted.withColumn("_pid", F.spark_partition_id()).localCheckpoint()
-    counts = {
-        r["_pid"]: r["n"]
-        for r in parted.groupBy("_pid").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    offsets, acc = {}, start
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
-    # pandas + Arrow -> a JVM LocalTableScan; a plain python list would go
-    # through applySchemaToPythonRDD, adding a pickled-RDD scan (and its
-    # Python-worker tasks) to every sequence call (r06, seen in the crawl
-    # event log)
-    import pandas as pd
-
-    if offsets:
-        off_df = spark.createDataFrame(
-            pd.DataFrame(
-                {"_pid": list(offsets), "_off": [offsets[p] for p in offsets]}
-            ),
-            schema="_pid int, _off long",
-        )
-    else:  # empty input: a pure-JVM empty relation (empty pandas falls
-        # back to the pickled-RDD path)
-        off_df = spark.range(0).select(
-            F.col("id").cast("int").alias("_pid"), F.col("id").alias("_off")
-        )
-    off_df = F.broadcast(off_df)
-    w = Window.partitionBy("_pid").orderBy(*[F.col(c) for c in order_cols])
-    return (
-        parted.join(off_df, "_pid")
-        .withColumn(seq_name, (F.row_number().over(w) + F.col("_off") - 1).cast("long"))
-        .drop("_pid", "_off")
+    pid = F.col("_pid")
+    obs = Observation()
+    parted = (
+        df.repartitionByRange(n_parts, *[F.col(c) for c in order_cols])
+        .withColumn("_pid", F.spark_partition_id())
+        .observe(obs, *[F.count(F.when(pid == i, 1)).alias(f"n{i}") for i in range(n_parts)])
+        .localCheckpoint()
     )
+    counts = obs.get
+    offsets, acc = [], start
+    for i in range(n_parts):
+        offsets.append(acc)
+        acc += int(counts[f"n{i}"])
+    off = F.get(F.array(*[F.lit(o).cast("long") for o in offsets]), pid)
+    w = Window.partitionBy("_pid").orderBy(*[F.col(c) for c in order_cols])
+    ranked = parted.withColumn(
+        seq_name, (F.row_number().over(w) + off - 1).cast("long")
+    ).drop("_pid")
+    return ranked, acc - start

@@ -292,21 +292,26 @@ def bootstrap(
     if isinstance(seeds, DataFrame):
         raw = seeds
     else:
+        # pandas + Arrow -> a JVM LocalTableScan; a list of tuples would be a
+        # pickled-RDD scan that starts Python workers on every core
         raw = spark.createDataFrame(
-            [(u, i) for i, u in enumerate(seeds)], "url string, seed_seq long"
+            pd.DataFrame({"url": list(seeds), "seed_seq": range(len(seeds))}),
+            "url string, seed_seq long",
         ).repartition(max(spark.sparkContext.defaultParallelism, 8))
     canon = (
         raw.withColumn("canon_url", U.canon("url"))
         .filter(F.col("canon_url").isNotNull())
     )
     ded = first_wins(canon, "canon_url", ["seed_seq"])
+    ranked, n_seeds = global_sequence(
+        ded, ["seed_seq"], "disc_seq", start=0,
+        eager_input=True,  # r06: the range-boundary sample pass otherwise
+        # re-runs the seed-gen mapInPandas + canon UDF + first_wins dedup
+        # chain a second time (same fix as the two run_cycle call sites;
+        # values unaffected)
+    )
     frontier = (
-        global_sequence(ded, ["seed_seq"], "disc_seq", start=0,
-                        eager_input=True)  # r06: the range-boundary sample
-        # pass otherwise re-runs the seed-gen mapInPandas + canon UDF +
-        # first_wins dedup chain a second time (same fix as the two
-        # run_cycle call sites; values unaffected)
-        .select(
+        ranked.select(
             "url",
             "canon_url",
             U.url_hash("canon_url").alias("url_hash"),
@@ -319,9 +324,9 @@ def bootstrap(
         )
     )
     # materialize once: frontier feeds 3-4 sinks below; without this the
-    # canonicalization UDF + dedup window re-execute per sink
+    # canonicalization UDF + dedup window re-execute per sink (the first
+    # write fills the cache)
     frontier = frontier.persist()
-    n_seeds = frontier.count()
     # seen records EVERY discovered canonical URL (robots-denied included —
     # they must never be re-processed); the frontier holds only allowed rows
     seen = frontier.select("url_hash", "canon_url", "disc_seq")
@@ -338,7 +343,7 @@ def bootstrap(
     if cfg.use_filter:
         if cfg.filter_kind == "cuckoo":
             # proactive pre-size: keep average load <= 80% of slots
-            per_bucket = -(-int(n_seeds) // cfg.n_buckets)
+            per_bucket = -(-n_seeds // cfg.n_buckets)
             while per_bucket > int(0.8 * geo * _CK_SLOTS):
                 geo *= 2
         filt = _build_seen_filter(cfg.filter_kind, seen, cfg.n_buckets, geo)
@@ -346,7 +351,7 @@ def bootstrap(
             io, filt, -1, cfg.filter_kind, cfg.n_buckets, geo,
             seen.select("url_hash"),
         )
-    counters = {"total_fetches": 0, "next_disc_seq": int(n_seeds)}
+    counters = {"total_fetches": 0, "next_disc_seq": n_seeds}
     if cfg.use_filter:
         # filter KIND + GEOMETRY are part of the committed state: blobs are
         # only probeable under the (kind, n_buckets, geometry) they were
@@ -381,20 +386,19 @@ def _filter_allowed(rows: DataFrame, host_state: DataFrame) -> DataFrame:
 
 
 def run_cycle(spark: SparkSession, io: TableIO, cycle: int, cfg: CrawlConfig) -> dict:
-    """One scheduler cycle; returns counters for metrics/bench."""
-    import os as _os
+    """One scheduler cycle; returns counters for metrics/bench.
+
+    Every count the cycle needs comes from work it does anyway: the batch
+    and new-URL totals from their sequence checkpoints, the parsed and
+    span totals from an ``observe()`` on the metrics write. The cycle's
+    Spark actions are its checkpoints and its writes."""
     import time as _time
+    from concurrent.futures import ThreadPoolExecutor
 
-    _prof = _os.environ.get("CROAWL_PROFILE") == "1"
+    from pyspark import inheritable_thread_target
+    from pyspark.sql import Observation
+
     _cycle_start = _time.perf_counter()
-    _t0 = [_cycle_start]
-
-    def _mark(label: str) -> None:
-        if _prof:
-            now = _time.perf_counter()
-            print(f"  [cycle {cycle}] {label}: {now - _t0[0]:.1f}s", flush=True)
-            _t0[0] = now
-
     if cfg.frontier_mode == "tombstone":
         # adds-minus-tombstones view: the dels side is O(cycles × batch),
         # so AQE resolves it as a broadcast anti-join — no frontier shuffle
@@ -436,7 +440,6 @@ def run_cycle(spark: SparkSession, io: TableIO, cycle: int, cfg: CrawlConfig) ->
     # due-time gate (J2 broadcast join: hosts << frontier). Robots were
     # enforced at insert time — the frontier contains only allowed rows.
     hs = F.broadcast(host_state.select("host", "crawl_delay", "last_fetch_cycle"))
-    _mark("read snapshots + gates defined")
     eligible = frontier.join(hs, "host", "left").filter(
         F.col("last_fetch_cycle").isNull()
         | (F.lit(cycle) >= F.col("last_fetch_cycle") + F.ceil("crawl_delay"))
@@ -452,15 +455,15 @@ def run_cycle(spark: SparkSession, io: TableIO, cycle: int, cfg: CrawlConfig) ->
         n_salt=cfg.n_salt,
     )
     fetch_base = int(counters.get("total_fetches", 0))
-    batch = global_sequence(
+    batch, n_sched = global_sequence(
         batch.select("canon_url", "url_hash", "host", "depth", "disc_seq"),
         ["depth", "disc_seq"],
         "fetch_seq",
         start=fetch_base,
         eager_input=True,  # r06: don't re-run the top-k windows for the
         # range-boundary sample pass
-    ).localCheckpoint()
-    _mark("rank+seq batch")
+    )
+    batch = batch.localCheckpoint()
 
     # 4. fetch — persist: feeds fetch_log, documents AND parse; without it
     # the synthetic fetch (at scale: the real fetch!) re-executes per sink
@@ -530,7 +533,10 @@ def run_cycle(spark: SparkSession, io: TableIO, cycle: int, cfg: CrawlConfig) ->
     )
     ded = first_wins(links, "canon_url", ["parent_fetch_seq", "link_pos"])
     if cfg.use_filter and filt is not None:
-        probed = _probe_seen_filter(geo_kind, ded, filt, geo_buckets, geo)
+        # checkpointed once: both union branches below read it, and AQE
+        # does not reuse the exchange between them, so links ->
+        # canonicalize -> first_wins would otherwise run twice
+        probed = _probe_seen_filter(geo_kind, ded, filt, geo_buckets, geo).localCheckpoint()
         maybe = probed.filter(F.col("maybe_seen")).drop("maybe_seen")
         fresh = probed.filter(~F.col("maybe_seen")).drop("maybe_seen")
         survivors = maybe.join(seen, ["url_hash", "canon_url"], "left_anti")
@@ -539,12 +545,13 @@ def run_cycle(spark: SparkSession, io: TableIO, cycle: int, cfg: CrawlConfig) ->
         new_links = ded.join(seen, ["url_hash", "canon_url"], "left_anti")
 
     seen_base = int(counters.get("next_disc_seq", 0))
-    new_rows = global_sequence(
+    new_rows, n_new = global_sequence(
         new_links, ["parent_fetch_seq", "link_pos"], "disc_seq",
         start=seen_base,
         eager_input=True,  # r06: don't re-run the seen-probe/anti-join
         # tail for the range-boundary sample pass
-    ).select(
+    )
+    new_rows = new_rows.select(
         "url",
         "canon_url",
         "url_hash",
@@ -554,12 +561,8 @@ def run_cycle(spark: SparkSession, io: TableIO, cycle: int, cfg: CrawlConfig) ->
         F.lit(0).cast("int").alias("priority"),
         F.lit("queued").alias("state"),
         F.lit(cycle).cast("int").alias("added_cycle"),
-    )
-    new_rows = new_rows.localCheckpoint()
-    _mark("links+dedup+probe+anti+seq")
+    ).localCheckpoint()
 
-    n_new = new_rows.count()
-    _mark("n_new count")
     # seen delta: ALL newly discovered URLs (denied ones included)
     seen_delta = new_rows.select("url_hash", "canon_url", "disc_seq")
 
@@ -583,32 +586,37 @@ def run_cycle(spark: SparkSession, io: TableIO, cycle: int, cfg: CrawlConfig) ->
     # urls_scheduled/urls_parsed/spans_parsed are genuinely PER BUCKET (sum
     # across partition_id = cycle totals); wall_ms is cycle-scoped and
     # repeated per row — aggregate it with max(), never sum() — and is also
-    # committed as the last_cycle_wall_ms counter.
+    # committed as the last_cycle_wall_ms counter. Fetch yields one row per
+    # batch row, so one aggregate over the fetch output gives all three;
+    # the cycle's parsed/span totals are observed as the table is written.
     _cycle_wall_ms = int((_time.perf_counter() - _cycle_start) * 1000)
-    n_sched = batch.count()
-    n_parsed_df = parsed.agg(
-        F.count(F.lit(1)).alias("n"), F.coalesce(F.sum("n_spans"), F.lit(0)).alias("s")
-    ).collect()[0]
-    _bucket = F.pmod("url_hash", F.lit(geo_buckets)).cast("int").alias("partition_id")
-    sched_b = batch.groupBy(_bucket).agg(F.count(F.lit(1)).alias("urls_scheduled"))
-    parsed_b = parsed.groupBy(_bucket).agg(
-        F.count(F.lit(1)).alias("urls_parsed"),
-        F.coalesce(F.sum("n_spans"), F.lit(0)).cast("long").alias("spans_parsed"),
-    )
+    is_parsed = F.col("status") == 200
+    totals = Observation()
     metrics = (
-        sched_b.join(parsed_b, "partition_id", "full")
+        fetched.groupBy(
+            F.pmod("url_hash", F.lit(geo_buckets)).cast("int").alias("partition_id")
+        )
+        .agg(
+            F.count(F.lit(1)).alias("urls_scheduled"),
+            F.count(F.when(is_parsed, 1)).alias("urls_parsed"),
+            F.coalesce(F.sum(F.when(is_parsed, F.col("n_spans"))), F.lit(0))
+            .cast("long").alias("spans_parsed"),
+        )
         .select(
             F.lit(cycle).cast("int").alias("cycle"),
             "partition_id",
-            F.coalesce("urls_scheduled", F.lit(0)).cast("long").alias("urls_scheduled"),
-            F.coalesce("urls_parsed", F.lit(0)).cast("long").alias("urls_parsed"),
-            F.coalesce("spans_parsed", F.lit(0)).cast("long").alias("spans_parsed"),
+            "urls_scheduled",
+            "urls_parsed",
+            "spans_parsed",
             F.lit(_cycle_wall_ms).cast("long").alias("wall_ms"),
             F.concat(F.lit(f"{cycle}:"), F.col("partition_id")).alias("lineage_ref"),
         )
+        .observe(
+            totals,
+            F.coalesce(F.sum("urls_parsed"), F.lit(0)).alias("parsed"),
+            F.coalesce(F.sum("spans_parsed"), F.lit(0)).alias("spans"),
+        )
     )
-
-    _mark("metrics prep")
 
     # r06 (guide §2.6 — overlap independent jobs): the per-cycle sink
     # writes are independent of each other (each reads already-persisted /
@@ -619,8 +627,9 @@ def run_cycle(spark: SparkSession, io: TableIO, cycle: int, cfg: CrawlConfig) ->
     # 8-9 jobs end to end. Grouping: the two sinks that re-read the
     # persisted fetch output share a thread; host_state precedes frontier
     # in its thread because new_allowed builds on the persisted
-    # host_state_next (written-first = materialized-once).
-    from concurrent.futures import ThreadPoolExecutor
+    # host_state_next (written-first = materialized-once). The filter
+    # update reads only the previous filter, the seen log and the
+    # checkpointed new rows, so it is a fourth task.
 
     def _writes_fetch() -> None:
         io.write_snapshot(fetch_log, "fetch_log", cycle)
@@ -670,23 +679,7 @@ def run_cycle(spark: SparkSession, io: TableIO, cycle: int, cfg: CrawlConfig) ->
         io.write_snapshot(frontier_next, "frontier", cycle)
         return (["frontier"], None)
 
-    with ThreadPoolExecutor(max_workers=3) as _pool:
-        _f_fetch = _pool.submit(_writes_fetch)
-        _f_side = _pool.submit(_writes_side)
-        _f_frontier = _pool.submit(_writes_frontier)
-        _f_fetch.result()
-        _f_side.result()
-        frontier_tables, replace_tables = _f_frontier.result()
-    _mark("table writes (3 threads)")
-    committed = [
-        "fetch_log", "documents", "metadata", "metrics",
-        "seen", "host_state", "content_dups", "content_seen",
-    ] + frontier_tables
-    new_counters = {
-        "total_fetches": fetch_base + n_sched,
-        "next_disc_seq": seen_base + int(n_new),
-        "last_cycle_wall_ms": _cycle_wall_ms,
-    }
+    tasks = [_writes_fetch, _writes_side, _writes_frontier]
     if cfg.use_filter:
         # auto-sizing: geometry is fixed per filter generation (incremental
         # merges require it), so when the committed load pushes the filter
@@ -697,7 +690,7 @@ def run_cycle(spark: SparkSession, io: TableIO, cycle: int, cfg: CrawlConfig) ->
         # signal: slot load factor > 0.85 (insert overflow would raise).
         from croawl_spark.operators.seenfilter import projected_fp
 
-        total_seen = seen_base + int(n_new)
+        total_seen = seen_base + n_new
         per_bucket = -(-total_seen // geo_buckets)  # ceil
         resized = False
         if geo_kind == "cuckoo":
@@ -718,22 +711,39 @@ def run_cycle(spark: SparkSession, io: TableIO, cycle: int, cfg: CrawlConfig) ->
             )
         # hash skew can overflow one cuckoo bucket while the average load
         # is fine — the resilient writer doubles geometry and rebuilds
-        geo = _write_filter_resilient(
-            io, filt_next, cycle, geo_kind, geo_buckets, geo, all_seen
+        tasks.append(
+            lambda: _write_filter_resilient(
+                io, filt_next, cycle, geo_kind, geo_buckets, geo, all_seen
+            )
         )
-        _mark(f"{geo_kind} filter update" + (" (resized)" if resized else ""))
+    # the pool's jobs carry the caller's job group and description
+    with ThreadPoolExecutor(max_workers=len(tasks)) as _pool:
+        futures = [_pool.submit(inheritable_thread_target(t)) for t in tasks]
+        results = [f.result() for f in futures]
+    frontier_tables, replace_tables = results[2]
+    committed = [
+        "fetch_log", "documents", "metadata", "metrics",
+        "seen", "host_state", "content_dups", "content_seen",
+    ] + frontier_tables
+    new_counters = {
+        "total_fetches": fetch_base + n_sched,
+        "next_disc_seq": seen_base + n_new,
+        "last_cycle_wall_ms": _cycle_wall_ms,
+    }
+    if cfg.use_filter:
         committed.append("seen_filter")
         new_counters["filter_kind"] = geo_kind
         new_counters["filter_n_buckets"] = geo_buckets
-        new_counters[_geo_counter(geo_kind)] = geo
+        new_counters[_geo_counter(geo_kind)] = results[3]
     io.commit_cycle(cycle, committed, counters=new_counters, replace=replace_tables)
     if replace_tables:
         for t in replace_tables:
             io.prune_orphans(t)
     for df in (fetched, host_state_next):
         df.unpersist()
-    return {"cycle": cycle, "scheduled": n_sched, "parsed": int(n_parsed_df["n"]),
-            "spans": int(n_parsed_df["s"])}
+    parsed_total = totals.get
+    return {"cycle": cycle, "scheduled": n_sched, "parsed": int(parsed_total["parsed"]),
+            "spans": int(parsed_total["spans"])}
 
 
 def run_crawl(

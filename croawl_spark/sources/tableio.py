@@ -19,6 +19,13 @@ Snapshot tables (frontier/seen/host_state/seen_filter) read ONLY their
 latest committed cycle; log tables (fetch_log/documents/metadata/metrics)
 read the union of all committed cycles — partition pruning by ``cycle``
 comes free from the directory layout.
+
+Schema-carrying reads: every plain segment records its schema in a
+``_schema.json`` sidecar (parquet readers skip ``_``-prefixed files), and
+reads pass it to ``spark.read.schema(...)``. Inferring a parquet schema
+reads a footer in a one-task Spark job per read; with the sidecar a read
+starts no job at all. Segments written without a sidecar (older
+warehouses, Hive-partitioned segments) are inferred as before.
 """
 
 from __future__ import annotations
@@ -29,8 +36,24 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
 
 SNAPSHOT_TABLES = ("frontier", "seen", "host_state", "seen_filter")
+SCHEMA_FILE = "_schema.json"
+
+
+def _as_nullable(t: DataType) -> DataType:
+    """``t`` with every field and element nullable — the form a parquet
+    read reports, so segments of one table record identical schemas."""
+    if isinstance(t, StructType):
+        return StructType(
+            [StructField(f.name, _as_nullable(f.dataType), True, f.metadata) for f in t.fields]
+        )
+    if isinstance(t, ArrayType):
+        return ArrayType(_as_nullable(t.elementType), True)
+    if isinstance(t, MapType):
+        return MapType(_as_nullable(t.keyType), _as_nullable(t.valueType), True)
+    return t
 
 
 class TableIO:
@@ -101,6 +124,8 @@ class TableIO:
         sort_by: list[str] | None = None,
     ) -> None:
         """Uncommitted write; becomes visible only after commit_cycle.
+        A plain segment (no ``partition_by``/``bucket_by``) records its
+        schema in a ``_schema.json`` sidecar for the readers.
 
         ``partition_by`` lays the segment out as Hive-style subdirectories
         (e.g. ``bucket=<pmod(hash,N)>``) so readers filtering on those
@@ -130,6 +155,9 @@ class TableIO:
             if partition_by:
                 w = w.partitionBy(*partition_by)
             w.parquet(path)
+            if not partition_by:
+                with open(os.path.join(path, SCHEMA_FILE), "w") as f:
+                    f.write(_as_nullable(df.schema).json())
             return
         n_files, bcols = bucket_by
         name = self._bucket_table_name(table, cycle)
@@ -163,6 +191,21 @@ class TableIO:
         raw = f"croawl_bkt_{tag}_{table}_{cycle}".replace("-", "m")
         return re.sub(r"[^A-Za-z0-9_]", "_", raw)
 
+    def _read_parquet(self, *dirs: str) -> DataFrame:
+        """Parquet scan of ``dirs`` with the schema their sidecars record,
+        when every one records the same; inferred (one Spark job) else."""
+        schemas = set()
+        for d in dirs:
+            try:
+                with open(os.path.join(d, SCHEMA_FILE)) as f:
+                    schemas.add(f.read())
+            except FileNotFoundError:
+                schemas.add(None)
+        reader = self.spark.read
+        if len(schemas) == 1 and None not in schemas:
+            reader = reader.schema(StructType.fromJson(json.loads(schemas.pop())))
+        return reader.parquet(*dirs)
+
     def _segment_df(self, table: str, cycle: int) -> DataFrame:
         """One committed segment as a DataFrame — through the catalog (so
         the bucketed output partitioning is visible to the planner) when
@@ -170,7 +213,7 @@ class TableIO:
         path = self._dir(table, cycle)
         layout = os.path.join(path, "_bucket_layout.json")
         if not os.path.exists(layout):
-            return self.spark.read.parquet(path)
+            return self._read_parquet(path)
         with open(layout) as f:
             meta = json.load(f)
         name = meta["name"]
@@ -202,7 +245,7 @@ class TableIO:
                 # mode): readers get the same resolved view transparently
                 return self.read_merge(table, cycle)
             raise FileNotFoundError(f"no committed snapshot for {table}")
-        return self.spark.read.parquet(self._dir(table, max(cycles)))
+        return self._read_parquet(self._dir(table, max(cycles)))
 
     def read_log(self, table: str, upto_cycle: int | None = None) -> DataFrame:
         m = self.read_manifest()
@@ -213,7 +256,7 @@ class TableIO:
             raise FileNotFoundError(f"no committed data for {table}")
         dirs = [self._dir(table, c) for c in cycles]
         try:
-            return self.spark.read.parquet(*dirs)
+            return self._read_parquet(*dirs)
         except Exception as e:
             # Hive-partitioned segments (write_snapshot partition_by=...)
             # can't share one multi-root scan; union per-segment scans

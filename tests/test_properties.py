@@ -15,7 +15,13 @@ import numpy as np
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from croawl_spark.functions.extract import span_fingerprint
+from croawl_spark.functions.extract import (
+    _OAI_RE,
+    _TAG_RE,
+    _attrs,
+    extract_from_html,
+    span_fingerprint,
+)
 from croawl_spark.functions.urls import canonicalize_url
 from croawl_spark.operators.seenfilter import (
     _ck_fp,
@@ -161,3 +167,84 @@ def test_span_fingerprint_is_offset_order_invariant(spans):
         mutated = [dict(s) for s in uniq]
         mutated[0]["kind"] = "media" if mutated[0]["kind"] == "text" else "text"
         assert span_fingerprint(mutated) != fp
+
+
+# -- V3 extraction: the distractor-<meta> skip --------------------------------
+
+
+def _extract_oracle(html: str) -> dict:
+    """extract_from_html as it was before ``<meta>`` tags without ``dc.``
+    skipped the attribute parse: every tag's attributes are parsed."""
+    title = identifier = oai = None
+    creators: list[str] = []
+    outlinks: list[str] = []
+    for m in _TAG_RE.finditer(html):
+        tag = m.group(1).lower()
+        a = _attrs(m.group(2))
+        if tag == "meta":
+            name = (a.get("name") or "").lower()
+            content = a.get("content")
+            if content is None:
+                continue
+            if name == "dc.title" and title is None:
+                title = content
+            elif name == "dc.creator":
+                creators.append(content)
+            elif name == "dc.identifier" and identifier is None:
+                identifier = content
+        else:
+            href = a.get("href")
+            if not href:
+                continue
+            if tag == "a":
+                outlinks.append(href)
+            if oai is None and _OAI_RE.search(href):
+                oai = href
+    return {
+        "dc_title": title,
+        "dc_creator": creators,
+        "dc_identifier": identifier,
+        "oai_endpoint": oai,
+        "outlinks": outlinks,
+    }
+
+
+_meta_names = st.sampled_from([
+    "dc.title", "DC.Title", "dc.CREATOR", "Dc.Identifier", "dc.creator", "dc.identifier",
+    "citation_dc.title", "citation_title", "citation_author", "og:title", "description",
+    "dc.titles", "xdc.creator", "DC.", "",
+])
+_attr_values = st.one_of(
+    st.text(alphabet=st.characters(codec="utf-8", exclude_characters="\"'<>"), max_size=10),
+    st.sampled_from(["dc.title", "see DC.x", "http://h.test/oai?verb=Identify"]),
+)
+
+
+@st.composite
+def _meta_tag(draw):
+    q = draw(st.sampled_from(['"', "'"]))
+    attrs = [f"{draw(st.sampled_from(['name', 'NAME', 'Name']))}={q}{draw(_meta_names)}{q}"]
+    if draw(st.booleans()):
+        attrs.append(f"content = {q}{draw(_attr_values)}{q}")
+    if draw(st.booleans()):
+        attrs.append(f"lang={q}{draw(_attr_values)}{q}")
+    attrs = draw(st.permutations(attrs))
+    return f"<{draw(st.sampled_from(['meta', 'META', 'Meta']))} {' '.join(attrs)}>"
+
+
+@st.composite
+def _link_tag(draw):
+    q = draw(st.sampled_from(['"', "'"]))
+    href = draw(st.one_of(_attr_values, st.sampled_from(["/oai/request", "/p/1", ""])))
+    return f"<{draw(st.sampled_from(['a', 'link', 'A']))} href={q}{href}{q}>"
+
+
+_pages = st.lists(
+    st.one_of(_meta_tag(), _link_tag(), st.text(max_size=12)), max_size=25
+).map("".join)
+
+
+@settings(max_examples=300, deadline=None)
+@given(_pages)
+def test_extract_meta_skip_equals_full_attribute_parse(html):
+    assert extract_from_html(html) == _extract_oracle(html)
